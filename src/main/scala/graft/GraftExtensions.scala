@@ -4,7 +4,7 @@ import org.apache.spark.sql.SparkSessionExtensions
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
-import graft.functions.{CharClassCounts, DamerauLevenshtein, JaroWinkler, MinHashBands, MisraGries, PolyHash, RollingFingerprint, SimHash64, TokenCount, TokenCountRewrite, VectorDot, WhitespaceTokens, WinnowFingerprint}
+import graft.functions.{CharClassCounts, DamerauLevenshtein, JaroWinkler, MinHashBands, MisraGries, PolyHash, RollingFingerprint, SimHash64, TokenCount, TokenCountRewrite, TokenCountsStrategy, VectorDot, WhitespaceTokens, WinnowFingerprint}
 
 /** Spark extension point: `--conf spark.sql.extensions=graft.GraftExtensions`
   * (or `.withExtensions(new GraftExtensions)`) registers every graft native
@@ -65,5 +65,8 @@ class GraftExtensions extends (SparkSessionExtensions => Unit) {
     // optimizer rule: size(whitespacetokens(x)) -> TokenCount(x), the
     // allocation-free count (see TokenCountRewrite doc)
     ext.injectOptimizerRule(_ => TokenCountRewrite)
+    // physical planning of the map-side token combiner behind
+    // WordCount.wordCount (see graft.functions.TokenCounts)
+    ext.injectPlannerStrategy(_ => TokenCountsStrategy)
   }
 }

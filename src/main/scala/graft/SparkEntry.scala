@@ -28,7 +28,8 @@ object SparkEntry {
   /** One entry per implemented operator from SURVEY.md §2. */
   def queries: Map[String, (SparkSession, String) => DataFrame] = Map(
     // -- WordCount family (reference batch + streaming normalization) --
-    "wordcount" -> ((s, d) => WordCount.wordCount(Tables.load(s, d, "documents"), "text")),
+    "wordcount" -> ((s, d) =>
+      WordCount.wordCount(Tables.load(s, d, "documents"), "text").orderBy("word")),
     "wordcount_topk" -> ((s, d) => WordCount.topWords(Tables.load(s, d, "documents"), "text", 50)),
     // Streaming plan verified batch-side: same transform, bounded input
     // (the reference's windowed pipeline, docs/README.md:257).

@@ -8,10 +8,13 @@ import org.apache.spark.sql.functions._
   * cluster/tools/run_fault_tests.py:25-30; counter evidence in
   * cluster/shared/reports/fault_test_20251115-181926.job.log).
   *
-  * Physical shape Catalyst produces: FileScan -> Project/Generate (explode)
-  * -> partial HashAggregate (the "combiner") -> Exchange(hash word) ->
-  * final HashAggregate -> Sort. Identical dataflow to the reference's
-  * map/combine/shuffle/reduce, with whole-stage codegen fusing the map side.
+  * Physical shape, the reference's map/combine/shuffle/reduce:
+  * FileScan -> TokenCounts (the native map-side combiner: byte-scan
+  * tokenizer + per-partition count table, see graft.functions.TokenCounts)
+  * -> partial HashAggregate sum -> Exchange(hash word) -> final
+  * HashAggregate sum. `readTextDir -> wordCount -> writeTsv` adds a local
+  * Sort and the text sink to the reduce side: 2 Spark jobs, scan+combine
+  * into the hash shuffle, then final sum + sort + write.
   */
 object WordCount {
 
@@ -31,16 +34,14 @@ object WordCount {
   def tokensBuiltins(text: Column): Column =
     filter(split(text, "\\s+"), t => length(t) > 0)
 
-  /** word -> count over a text column; sorted by word to match the
-    * reference's reducer output ordering (SURVEY §2.4: MapReduce sorts by
-    * key for free, Spark needs the explicit orderBy).
+  /** word -> count over a text column, in no particular order (callers
+    * that need one add it, as the "wordcount" query does with
+    * `orderBy("word")`; `writeTsv` sorts each part file).
     */
   def wordCount(lines: DataFrame, textCol: String): DataFrame =
-    lines
-      .select(explode(tokens(col(textCol))).as("word"))
+    graft.functions.TokenCounts(lines, textCol)
       .groupBy("word")
-      .agg(count(lit(1)).as("cnt"))
-      .orderBy("word")
+      .agg(sum("n").as("cnt"))
 
   /** Streaming-pipeline normalization applied batch-side: uppercase before
     * counting (docs/README.md:257 "convertidas para maiúsculas"), top-k by
@@ -64,18 +65,20 @@ object WordCount {
   def readTextDir(spark: SparkSession, dir: String): Dataset[String] =
     spark.read.option("recursiveFileLookup", "true").textFile(dir)
 
-  /** Sorted tab-separated text sink (SURVEY §2.1 S2): `word\tcount` lines,
-    * the reference's TextOutputFormat contract
-    * (…fault_test_20251115-181926.job.log:176). `counts` ends in
-    * `orderBy("word")`, so the write range-partitions on word and part files
-    * are globally sorted in file-name order — same contract as the
-    * reference's single sorted reduce output, without forcing one task.
-    * Default mode errors if the path exists (S3 output-exists guard, the
-    * reference's FileAlreadyExistsException behavior); pass
-    * overwrite = true for the harness's pre-delete semantics.
+  /** Reducer-sorted tab-separated text sink (SURVEY §2.1 S2): `word\tcount`
+    * lines, the reference's TextOutputFormat contract
+    * (…fault_test_20251115-181926.job.log:176). Each part file is sorted by
+    * word, as each Hadoop reducer's output is under its HashPartitioner;
+    * files are not ordered against each other. When the reduce side is one
+    * partition (AQE coalesces a small shuffle to one), the single part file
+    * is globally sorted. Default mode errors if the path exists (S3
+    * output-exists guard, the reference's FileAlreadyExistsException
+    * behavior); pass overwrite = true for the harness's pre-delete
+    * semantics.
     */
   def writeTsv(counts: DataFrame, path: String, overwrite: Boolean = false): Unit =
     counts
+      .sortWithinPartitions("word")
       .select(concat_ws("\t", col("word"), col("cnt")).as("value"))
       .write.mode(if (overwrite) "overwrite" else "errorifexists")
       .text(path)

@@ -51,9 +51,6 @@ object BpeTokenCount {
 
   private def isDigit(b: Byte): Boolean = b >= '0' && b <= '9'
 
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
-
   /** Static so generated code dispatches with one monomorphic call. */
   def compute(s: UTF8String): Int = {
     val bytes = s.getBytes
@@ -72,7 +69,7 @@ object BpeTokenCount {
         while (run < 3 && i + run < n && isDigit(bytes(i + run))) run += 1
         count += 1
         i += run
-      } else if (isWs(b)) {
+      } else if (WhitespaceTokens.isWs(b)) {
         i += 1
       } else {
         // one code point: lead byte's high bits give the sequence length

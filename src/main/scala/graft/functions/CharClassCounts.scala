@@ -21,7 +21,7 @@ import org.apache.spark.unsafe.types.UTF8String
   * tested in FunctionsSpec): Spark's `length` counts code points, and
   * Java regex matches code points, so each non-ASCII code point — one
   * UTF-8 leading byte — counts as one punctuation character; `\s` is
-  * exactly the six-byte ASCII set [ \t\n\x0B\f\r] that `isWs`
+  * exactly the six-byte ASCII set [ \t\n\x0B\f\r] that `WhitespaceTokens.isWs`
   * recognizes, so non-ASCII "whitespace" and ASCII control characters
   * outside that set count as punctuation, matching the regex.
   */
@@ -57,9 +57,6 @@ object CharClassCounts {
     packed.bitwiseAND(lit(0xffffffffL)).cast("int")
   }
 
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
-
   /** Static so generated code dispatches with one monomorphic call.
     * UTF-8 walk: ASCII bytes classify directly; a leading byte
     * (11xxxxxx) is one non-ASCII code point -> punctuation; continuation
@@ -75,7 +72,7 @@ object CharClassCounts {
       val b = bytes(i)
       if ((b & 0x80) == 0) {
         if (b >= '0' && b <= '9') digit += 1
-        else if ((b >= 'A' && b <= 'Z') || (b >= 'a' && b <= 'z') || isWs(b)) ()
+        else if ((b >= 'A' && b <= 'Z') || (b >= 'a' && b <= 'z') || WhitespaceTokens.isWs(b)) ()
         else punct += 1
       } else if ((b & 0xc0) == 0xc0) punct += 1
       i += 1

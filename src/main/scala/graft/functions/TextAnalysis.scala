@@ -973,9 +973,8 @@ object TextAnalysis {
       .orderBy(col("est").desc, col("word"))
 
   def vocabulary(docs: DataFrame, minCount: Long = 2): DataFrame = {
-    val counts = docs
-      .select(explode(WordCount.tokens(col("text"))).as("term"))
-      .groupBy("term").agg(count(lit(1)).as("n"))
+    val counts = WordCount.wordCount(docs, "text")
+      .select(col("word").as("term"), col("cnt").as("n"))
       .filter(col("n") >= minCount)
     val w = org.apache.spark.sql.expressions.Window
       .orderBy(col("n").desc, col("term"))

@@ -36,9 +36,6 @@ object TokenCount {
   def apply(c: Column): Column =
     ColumnBridge.column(TokenCount(ColumnBridge.expression(c)))
 
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
-
   /** Static so generated code dispatches with one monomorphic call. Must
     * count exactly what `WhitespaceTokens.compute` emits — the optimizer
     * rewrite below is only sound under that equivalence (differential-
@@ -50,9 +47,9 @@ object TokenCount {
     var count = 0
     var i = 0
     while (i < n) {
-      while (i < n && isWs(bytes(i))) i += 1
+      while (i < n && WhitespaceTokens.isWs(bytes(i))) i += 1
       if (i < n) count += 1
-      while (i < n && !isWs(bytes(i))) i += 1
+      while (i < n && !WhitespaceTokens.isWs(bytes(i))) i += 1
     }
     count
   }

@@ -39,8 +39,11 @@ object WhitespaceTokens {
   def apply(c: Column): Column =
     ColumnBridge.column(WhitespaceTokens(ColumnBridge.expression(c)))
 
-  private def isWs(b: Byte): Boolean =
-    b == ' ' || b == '\t' || b == '\n' || b == 0x0b || b == '\f' || b == '\r'
+  /** The six whitespace bytes: space and 0x09-0x0D (\t \n VT \f \r). The
+    * delimiter test shared by every byte scan in this package, so their
+    * tokens agree by construction.
+    */
+  def isWs(b: Byte): Boolean = b == ' ' || (b >= '\t' && b <= '\r')
 
   /** Static so generated code dispatches with one monomorphic call. */
   def compute(s: UTF8String): ArrayData = {

@@ -14,6 +14,15 @@ object ColumnBridge {
   def column(e: Expression): Column = ExpressionUtils.column(e)
   def expression(c: Column): Expression = ExpressionUtils.expression(c)
 
+  /** A DataFrame over a logical plan built outside the public API — how a
+    * custom logical node (e.g. `graft.functions.TokenCounts`) becomes a
+    * Dataset.
+    */
+  def ofRows(spark: org.apache.spark.sql.SparkSession,
+      plan: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan): org.apache.spark.sql.DataFrame =
+    org.apache.spark.sql.classic.Dataset.ofRows(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], plan)
+
   /** Register a custom expression as a session-temp SQL function so it can
     * be referenced from SQL strings and higher-order-function lambdas.
     */

@@ -452,7 +452,7 @@ class ScaleSpec extends AnyFunSuite {
         |GROUP BY word ORDER BY word""".stripMargin)
       .as[(String, Long)].collect().toSeq
     val dfCounts = graft.core.WordCount.wordCount(
-      Tables.load(spark, dir, "documents"), "text")
+      Tables.load(spark, dir, "documents"), "text").orderBy("word")
       .as[(String, Long)].collect().toSeq
     assert(sqlCounts === dfCounts)
   }

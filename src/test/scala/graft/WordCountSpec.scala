@@ -153,6 +153,116 @@ class WordCountSpec extends AnyFunSuite {
     assert(expected("the") > 20L)
   }
 
+  /** Exact counts by the regex spelling: maximal runs of non-`\s`. */
+  private def regexCounts(lines: Seq[String]): Map[String, Long] =
+    lines.filter(_ != null).flatMap(_.split("\\s+")).filter(_.nonEmpty)
+      .groupMapReduce(identity)(_ => 1L)(_ + _)
+
+  /** Lines over a hostile alphabet: ASCII, all six whitespace bytes,
+    * 2-, 3- and 4-byte UTF-8, and a small vocabulary so words repeat.
+    */
+  private def hostileLines(seed: Int, n: Int): Seq[String] = {
+    val rnd = new Random(seed)
+    val frags = Seq("a", "b", "ab", "ba", "w1", "w2", " ", "\t", "\n", "\u000b", "\f", "\r",
+      "\u00e9", "\u00df", "\u6f22\u5b57", "\ud83d\ude42")
+    (1 to n).map(_ => (1 to rnd.nextInt(30)).map(_ => frags(rnd.nextInt(frags.size))).mkString)
+  }
+
+  test("wordCount (native combiner) matches explode(tokensBuiltins) + groupBy.count") {
+    val url = getClass.getResource("/natural_corpus.txt")
+    val natural = scala.io.Source.fromURL(url).getLines().toSeq
+    val longToken = "L" * (graft.functions.TokenCounter.InitialArenaBytes * 3)
+    val lines: Seq[String] = hostileLines(11, 400) ++ natural ++
+      Seq(null, "", " \t\n\u000b\f\r ", s"$longToken x $longToken", "\u00e9\u00e9 \u00e9\u00e9", null)
+    // several partitions, so the final sum merges partial counts
+    val df = lines.toDF("text").repartition(3)
+    val got = WordCount.wordCount(df, "text").as[(String, Long)].collect()
+    val viaBuiltins = df.select(explode(WordCount.tokensBuiltins(col("text"))).as("word"))
+      .groupBy("word").count().as[(String, Long)].collect().toMap
+    assert(got.length === got.map(_._1).distinct.length, "a word appears twice in the final counts")
+    assert(got.toMap === viaBuiltins)
+    assert(got.toMap === regexCounts(lines))
+    assert(got.toMap.apply(longToken) === 2L)
+  }
+
+  test("TokenCounter flush path: a tiny key bound emits duplicate partial keys that sum exactly") {
+    import org.apache.spark.unsafe.types.UTF8String
+    val longToken = "\u6f22" * graft.functions.TokenCounter.InitialArenaBytes
+    val lines: Seq[String] = hostileLines(5, 200) ++ Seq(null, "", s"a $longToken b $longToken")
+    val batches = mutable.Buffer[(Long, Int, Boolean)]()
+    val rows = new graft.functions.TokenCounter(maxKeys = 3)
+      .counts(lines.iterator.map(l => if (l == null) null else UTF8String.fromString(l)),
+        (tokens, keys, full) => batches += ((tokens, keys, full)))
+      .map(r => r.getUTF8String(0).toString -> r.getLong(1)).toList
+    val summed = rows.groupMapReduce(_._1)(_._2)(_ + _)
+    assert(summed === regexCounts(lines))
+    assert(rows.size > summed.size, "the flush path never emitted a key twice")
+    assert(batches.count(_._3) > 1, s"expected several full-table flushes: $batches")
+    assert(batches.forall(_._2 <= 3))
+    assert(batches.map(_._2).sum === rows.size)
+    assert(batches.map(_._1).sum === summed.values.sum)
+  }
+
+  test("writeTsv(wordCount) runs as 2 jobs over one hash exchange, no range partitioning") {
+    import java.util.concurrent.ConcurrentLinkedQueue
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.catalyst.plans.physical.HashPartitioning
+    import org.apache.spark.sql.execution.{QueryExecution, SparkPlan}
+    import org.apache.spark.sql.execution.adaptive.AdaptiveSparkPlanHelper
+    import org.apache.spark.sql.execution.exchange.ShuffleExchangeExec
+    import org.apache.spark.sql.util.QueryExecutionListener
+    val base = Files.createTempDirectory("graft-wc-shape")
+    val in = base.resolve("in").toString
+    CorpusGenerator.referenceCorpus(spark, 3, 200).repartition(3).write.text(in)
+    val sc = spark.sparkContext
+    val groups = new ConcurrentLinkedQueue[String]()
+    val plans = new ConcurrentLinkedQueue[SparkPlan]()
+    val jobListener = new SparkListener {
+      override def onJobStart(js: SparkListenerJobStart): Unit =
+        groups.add(String.valueOf(js.properties.getProperty("spark.jobGroup.id")))
+    }
+    val planListener = new QueryExecutionListener {
+      override def onSuccess(f: String, qe: QueryExecution, ns: Long): Unit = plans.add(qe.executedPlan)
+      override def onFailure(f: String, qe: QueryExecution, e: Exception): Unit = ()
+    }
+    sc.addSparkListener(jobListener)
+    spark.listenerManager.register(planListener)
+    try {
+      sc.setJobGroup("wc-shape", "writeTsv(wordCount)")
+      WordCount.writeTsv(WordCount.wordCount(
+        WordCount.readTextDir(spark, in).toDF("text"), "text"), base.resolve("out").toString)
+      // Both listeners share one in-order queue: once the marker job is
+      // seen, every event of the write has been delivered.
+      sc.setJobGroup("wc-marker", "marker")
+      sc.parallelize(Seq(1), 1).count()
+      val deadline = System.nanoTime() + 30000000000L
+      while (!groups.contains("wc-marker") && System.nanoTime() < deadline) Thread.sleep(10)
+    } finally {
+      sc.clearJobGroup()
+      spark.listenerManager.unregister(planListener)
+      sc.removeSparkListener(jobListener)
+    }
+    val helper = new AdaptiveSparkPlanHelper {}
+    val exchanges = plans.asScala.toSeq.flatMap(p =>
+      helper.collect(p) { case e: ShuffleExchangeExec => e.outputPartitioning })
+    val shown = plans.asScala.mkString("\n")
+    assert(exchanges.size === 1, s"expected one shuffle:\n$shown")
+    assert(exchanges.head.isInstanceOf[HashPartitioning], shown)
+    assert(!shown.toLowerCase.contains("rangepartitioning"), shown)
+    // the combiner's own metrics: every token in, far fewer rows out
+    val combiner = plans.asScala.toSeq.flatMap(p =>
+      helper.collect(p) { case c: graft.functions.TokenCountsExec => c.metrics })
+    assert(combiner.size === 1, shown)
+    assert(combiner.head("numInputTokens").value === 13L * 3 * 200)
+    assert(combiner.head("numOutputRows").value > 0L)
+    assert(combiner.head("numOutputRows").value < 13L * 3 * 200 / 2)
+    assert(combiner.head("numFlushes").value === 0L)
+    assert(groups.asScala.count(_ == "wc-shape") === 2, s"jobs by group: $groups")
+    val back = WordCount.readTextDir(spark, base.resolve("out").toString).collect()
+      .map { l => val Array(w, c) = l.split("\t"); w -> c.toLong }.toMap
+    assert(back === CorpusGenerator.expectedCounts(3, 200))
+  }
+
   test("readTextDir scans nested directories recursively (S1)") {
     val root = Files.createTempDirectory("graft-scan")
     Files.createDirectories(root.resolve("a/b"))
@@ -173,7 +283,7 @@ class WordCountSpec extends AnyFunSuite {
     val back = WordCount.readTextDir(spark, out).collect()
       .map { l => val Array(w, c) = l.split("\t"); w -> c.toLong }.toMap
     assert(back === CorpusGenerator.expectedCounts(2, 50))
-    // file contents are sorted within each part file (range-partitioned sort)
+    // file contents are sorted within each part file (reducer-sorted sink)
     val files = Files.list(java.nio.file.Paths.get(out)).iterator().asScala
       .filter(_.getFileName.toString.startsWith("part-")).toSeq
     for (f <- files) {
