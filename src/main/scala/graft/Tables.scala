@@ -1,6 +1,13 @@
 package graft
 
+import java.io.FileNotFoundException
+import java.util.{Collections, WeakHashMap}
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.{FileStatus, Path}
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.functions.{col, expr}
+import org.apache.spark.sql.types.{LongType, StructType, TimestampNTZType}
 
 /** Loaders for the driver-provided test tables (TESTDATA.md / FIXTURES.md §B).
   *
@@ -14,7 +21,25 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
-  /** `events.ts` has shipped in three parquet encodings across testdata
+  /** Load one table as a fresh DataFrame.
+    *
+    * The Parquet schema is resolved once per session and file version, not
+    * once per call: Spark infers a Parquet schema by launching a Spark job
+    * (even for a single file), and every query's build would otherwise pay
+    * that job for each table it reads. The resolved `StructType` is handed
+    * to `spark.read.schema(...)`, which skips inference and its job. File
+    * listing and the scan itself still run on every call.
+    *
+    * The cache (`schemaOf`) holds only the schema, keyed weakly by session
+    * (so no session is kept alive) and then by path, one entry per path.
+    * Each entry carries a stamp of what the schema was inferred from: the
+    * path, length and modification time of every file under the path, plus
+    * the session's inference-affecting Parquet confs. A rewritten or added
+    * file, or a changed conf, changes the stamp and the next load infers
+    * again. The DataFrame itself is not cached: two loads of one table must
+    * carry distinct attribute ids, or a self-join of them is ambiguous.
+    *
+    * `events.ts` has shipped in three parquet encodings across testdata
     * generations, so the loader normalizes by the OBSERVED read type rather
     * than assuming one: (a) TIMESTAMP(NANOS), which Spark's vectorized
     * reader rejects unless `spark.sql.legacy.parquet.nanosAsLong=true` (set
@@ -27,17 +52,58 @@ object Tables {
     * build, not here — a loader mutating global session state per call is a
     * correctness hazard under concurrent queries.
     */
-  def load(spark: SparkSession, dir: String, name: String): DataFrame =
-    if (name == "events") {
-      import org.apache.spark.sql.functions.{col, expr}
-      import org.apache.spark.sql.types.{LongType, TimestampNTZType}
-      val df = spark.read.parquet(s"$dir/$name.parquet")
-      df.schema("ts").dataType match {
-        case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
-        case TimestampNTZType => df.withColumn("ts", col("ts").cast("timestamp"))
-        case _                => df
-      }
-    } else spark.read.parquet(s"$dir/$name.parquet")
+  def load(spark: SparkSession, dir: String, name: String): DataFrame = {
+    val path = s"$dir/$name.parquet"
+    val df = spark.read.schema(schemaOf(spark, path)).parquet(path)
+    if (name == "events") df.schema("ts").dataType match {
+      case LongType         => df.withColumn("ts", expr("timestamp_micros(ts div 1000)"))
+      case TimestampNTZType => df.withColumn("ts", col("ts").cast("timestamp"))
+      case _                => df
+    } else df
+  }
+
+  /** What a cached schema was inferred from: every file under the path as
+    * (path, length, modification time), and the session's values of the
+    * confs that change what Parquet schema inference returns.
+    */
+  private final case class Stamp(files: Seq[(String, Long, Long)], confs: Seq[Option[String]])
+
+  private val inferenceConfs = Seq(
+    "spark.sql.legacy.parquet.nanosAsLong",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.mergeSchema")
+
+  private val schemas =
+    Collections.synchronizedMap(new WeakHashMap[SparkSession, ConcurrentHashMap[String, (Stamp, StructType)]])
+
+  /** `path`'s Parquet schema as `spark.read.parquet(path)` would infer it,
+    * inferred at most once per session and stamp (see `load`). A path that
+    * does not exist is not cached: inference reports it as Spark does.
+    */
+  private[graft] def schemaOf(spark: SparkSession, path: String): StructType = {
+    val stamp = stampOf(spark, path)
+    val bySession = schemas.computeIfAbsent(spark, _ => new ConcurrentHashMap)
+    Option(bySession.get(path)).filter(e => stamp.contains(e._1)).map(_._2).getOrElse {
+      val schema = spark.read.parquet(path).schema
+      stamp.foreach(s => bySession.put(path, (s, schema)))
+      schema
+    }
+  }
+
+  private def stampOf(spark: SparkSession, path: String): Option[Stamp] = {
+    val p = new Path(path)
+    val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
+    // listStatus, not listFiles: listFiles builds a LocatedFileStatus per
+    // file, which on the local filesystem costs milliseconds per call.
+    def leaves(st: FileStatus): Seq[FileStatus] =
+      if (st.isDirectory) fs.listStatus(st.getPath).toSeq.flatMap(leaves) else Seq(st)
+    try Some(Stamp(
+      leaves(fs.getFileStatus(p)).map(f => (f.getPath.toString, f.getLen, f.getModificationTime)),
+      inferenceConfs.map(spark.conf.getOption)))
+    catch { case _: FileNotFoundException => None }
+  }
 
   /** The session settings every graft entry point builds with. Extensions
     * ride along (injected functions + the TokenCountRewrite optimizer
@@ -73,7 +139,6 @@ object Tables {
     * code works against any warehouse filesystem.
     */
   def dropManagedTable(spark: SparkSession, name: String): Unit = {
-    import org.apache.hadoop.fs.Path
     val catalog = spark.sessionState.catalog
     val id = spark.sessionState.sqlParser.parseTableIdentifier(name)
     val toDelete: Option[Path] =

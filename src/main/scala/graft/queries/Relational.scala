@@ -447,7 +447,7 @@ object Relational {
         "names; duplicate n_name would merge groups the flat spelling keeps")
     def nameOf(key: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
       natRows.foldLeft(lit(null).cast("string")) { (acc, r) =>
-        when(key === lit(r.getInt(0)), lit(r.getString(1))).otherwise(acc)
+        when(key === lit(r.get(0)), lit(r.getString(1))).otherwise(acc)
       }
     li
       .join(sup, col("l_suppkey") === col("s_suppkey"))
